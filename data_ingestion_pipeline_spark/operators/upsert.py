@@ -105,15 +105,18 @@ def distribute_for_write(df: DataFrame, *cols: str) -> DataFrame:
     would be SILENTLY dropped — no distribution at all, O(input
     partitions × values) small files per micro-batch. There we fall
     back to the plain hash repartition: without AQE no skew split
-    exists anyway, and micro-batches are small by construction."""
+    exists anyway, and micro-batches are small by construction. The
+    same fallback applies when the AQE setting cannot be read: the
+    hash repartition lays files out correctly either way, while a
+    hint in a session without AQE would be dropped silently."""
     if caller_partitioned(df):
         return df
     try:
         aqe = str(
             df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
         ).lower() == "true"
-    except Exception:
-        aqe = True
+    except Exception:  # noqa: BLE001 — AQE state unknown: fail closed
+        aqe = False
     if not aqe:
         return df.repartition(*[F.col(c) for c in cols])
     return df.hint("rebalance", *cols)

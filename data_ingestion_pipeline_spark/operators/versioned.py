@@ -21,17 +21,29 @@ nothing but parquet files and one pointer:
 - any historical version stays readable (time travel) until
   explicitly vacuumed.
 
-Two COW granularities: `commit_version`/`upsert_version` rewrite the
-whole snapshot (simple; fine for dimension-sized tables), while
-`commit_version_partitioned`/`upsert_version_cow` carry untouched
-partitions' files into the new manifest BY REFERENCE and rewrite
-only touched days — commit cost ∝ update slice, the construction
-that holds at 100 TB. `read_version_pruned` turns the manifest's
-partition tags into metadata-only file pruning (no listing, no
-footer reads for excluded partitions). The manifest is file-level
-metadata (KBs per thousand files), the pointer swap is O(1), and
-snapshot reads plan exactly like any parquet scan (pushdown/pruning
-untouched: readers get a file list, Catalyst does the rest).
+Every commit takes one path. The writer resolves the parent manifest
+once; new data files land through `_write_data` (fresh per-attempt
+directory, hash distribution when partitioned, inline CHECK
+guards); row-level DELETE/UPDATE/MERGE extend the deletion vector
+through `_extend_dv`; `_commit` derives the new manifest from the
+parent — every snapshot-level key (`_SNAPSHOT_KEYS`: schema,
+partition tags and the column they derive from, project_schema,
+rename map, DV pointer) carries unless the operation changes it —
+and publishes it through `_publish_manifest`; write-time index
+maintenance runs after the publish (`_maintain_indexes`). Writers
+differ only in the files they list and the keys they override:
+`commit_version`/`upsert_version` rewrite the whole snapshot
+(simple; fine for dimension-sized tables), while
+`commit_version_partitioned`/`upsert_version_cow`, appends, DDL,
+retention and maintenance carry untouched files into the new
+manifest BY REFERENCE — commit cost ∝ update slice, the
+construction that holds at 100 TB. `read_version_pruned` turns the
+manifest's partition tags into metadata-only file pruning (no
+listing, no footer reads for excluded partitions). The manifest is
+file-level metadata (KBs per thousand files), the pointer swap is
+O(1), and snapshot reads plan exactly like any parquet scan
+(pushdown/pruning untouched: readers get a file list, Catalyst does
+the rest).
 """
 
 from __future__ import annotations
@@ -404,6 +416,110 @@ def _attempt_data_dir(path: str, v: int) -> str:
     return os.path.join(path, "data", f"v{v}-{uuid.uuid4().hex[:8]}")
 
 
+# ---- the commit path ----------------------------------------------
+# Snapshot-level manifest keys: facts about the table that hold from
+# one version to the next until an operation changes them — the
+# logical schema, the per-file partition tags and the column they
+# derive from (partition_col for a clustered layout, ts_col for the
+# day layout, whose PART_COL is stripped before the schema is
+# recorded), project_schema (files may predate the schema: readers
+# null-fill), the per-file physical-name map of rename_column, and
+# the deletion-vector pointer. `_commit` is the one place that
+# decides what a new manifest keeps: each key carries from the parent
+# unless the operation overrides it. Dropping one by omission is how
+# deletes resurrected (a carried-files writer that lost `dv`) and how
+# renamed columns would read as NULL (a writer that lost `renames`).
+_SNAPSHOT_KEYS = (
+    "schema",
+    "partitions",
+    "partition_col",
+    "ts_col",
+    "project_schema",
+    "renames",
+    "dv",
+)
+
+
+def _parent(path: str) -> dict:
+    """The resolved current manifest — the parent of the next commit;
+    {} for a table with no committed snapshot."""
+    return _manifest(path) if current_version(path) else {}
+
+
+def _commit(
+    path: str,
+    parent: dict,
+    files: list[str],
+    meta: dict,
+    expected_current: int | None,
+    **changes,
+) -> int:
+    """Publish the version after `parent` listing `files` and return
+    it. Every snapshot key (_SNAPSHOT_KEYS) carries from `parent`
+    unless `changes` sets it; None drops the key. A partitioned
+    snapshot keeps the tag of every file the tag map names and tags
+    any other file from its directory (partition_col, else PART_COL).
+    committed_at backs AS-OF-timestamp time travel (wall clock — an
+    audit attribute, never a correctness input to any query result).
+    `parent` doubles as the delta encoder's previous snapshot, so the
+    commit never resolves the chain a second time."""
+    m = {k: parent[k] for k in _SNAPSHOT_KEYS if k in parent}
+    m.update(changes)
+    m = {k: val for k, val in m.items() if val is not None}
+    if "partitions" in m:
+        tags, col = m["partitions"], m.get("partition_col", PART_COL)
+        m["partitions"] = {
+            f: tags[f] if f in tags else _partition_of(f, col) for f in files
+        }
+    v = parent.get("version", 0) + 1
+    m.update(version=v, files=sorted(files), meta=meta, committed_at=time.time())
+    _publish_manifest(path, v, m, expected_current, prev=parent or None)
+    return v
+
+
+def _write_data(
+    df: DataFrame, path: str, v: int, partition_col: str | None = None
+) -> list[str]:
+    """Write version v's new data files into a fresh attempt directory
+    and return their relpaths. Rows pass the table's CHECK constraints
+    inline (_guarded_write); with `partition_col` they are hash-
+    distributed on it first and laid out partitionBy it."""
+    data_dir = _attempt_data_dir(path, v)
+
+    def write(g: DataFrame) -> None:
+        w = g.write.mode("overwrite")
+        if partition_col is not None:
+            w = w.partitionBy(partition_col)
+        w.parquet(data_dir)
+
+    if partition_col is not None:
+        df = distribute_for_write(df, partition_col)
+    _guarded_write(df, path, write)
+    return _walk_rel_parquet(data_dir, path)
+
+
+def _maintain_indexes(
+    spark: SparkSession,
+    path: str,
+    v: int,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+) -> None:
+    """Write-time index maintenance for the just-published version v:
+    refresh the min/max skipping index of each `stats_cols` column and
+    the bloom index of each `bloom_cols` column, incrementally (only
+    new files' footers are read). A failure here leaves the commit
+    durable and raises IndexMaintenanceError (never the raw error),
+    so callers do not mistake it for a failed commit and double-write
+    on retry."""
+    try:
+        for col in stats_cols or ():
+            build_column_stats(spark, path, col)
+        for col in bloom_cols or ():
+            build_bloom_index(spark, path, col)
+    except Exception as e:  # noqa: BLE001 — commit already durable
+        raise IndexMaintenanceError(v, e) from e
+
 
 def commit_version(
     spark: SparkSession,
@@ -432,54 +548,29 @@ def commit_version(
     of protocol. `meta` rides along in the manifest (e.g. the
     streaming sink's batch id — see stream lifecycle below).
 
-    `stats_cols` is WRITE-TIME INDEX MAINTENANCE (what Delta/Iceberg
-    do on every write): immediately after the pointer swap, the
-    min/max skipping index is refreshed INCREMENTALLY for each named
-    column (only this commit's new files' footers are read — see
-    build_column_stats), so range probes through `stats_lookup` never
-    hit the stale-rebuild path for tables whose writers declare their
-    skip columns; a lookup on an undeclared column still rebuilds
-    transparently. Maintenance runs AFTER the pointer swap: a failure
-    there leaves the commit durable and raises IndexMaintenanceError
-    (never the raw error), so callers don't mistake it for a failed
-    commit and double-write on retry.
+    The new snapshot is unpartitioned and records df's schema (so an
+    empty commit stays readable via _empty_snapshot); of the parent's
+    snapshot keys only the rename map carries, since it names files
+    and is inert for files it does not list.
+
+    `stats_cols` / `bloom_cols` are WRITE-TIME INDEX MAINTENANCE (what
+    Delta/Iceberg do on every write): immediately after the pointer
+    swap the min/max skipping index and the point-lookup bloom index
+    are refreshed INCREMENTALLY for each named column (see
+    _maintain_indexes), so probes through `stats_lookup` /
+    `bloom_lookup` never hit the stale-rebuild path for tables whose
+    writers declare their skip columns; a lookup on an undeclared
+    column still rebuilds transparently.
     """
     _occ_check(path, expected_current)
-    v = current_version(path) + 1
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        df, path, lambda g: g.write.mode("overwrite").parquet(data_dir)
+    parent = _parent(path)
+    files = _write_data(df, path, parent.get("version", 0) + 1)
+    v = _commit(
+        path, parent, files, meta or {}, expected_current,
+        schema=df.schema.json(), partitions=None, partition_col=None,
+        ts_col=None, project_schema=None, dv=None,
     )
-    rel_dir = os.path.relpath(data_dir, path)
-    files = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    # schema rides in every manifest so an empty commit (zero part
-    # files) stays readable via _empty_snapshot; committed_at backs
-    # AS-OF-timestamp time travel (wall clock — an audit attribute,
-    # never a correctness input to any query result)
-    _publish_manifest(
-        path,
-        v,
-        {"version": v, "files": files, "meta": meta or {},
-         "schema": df.schema.json(), "committed_at": time.time()},
-        expected_current,
-    )
-    for col in stats_cols or ():
-        try:
-            build_column_stats(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
-    # `bloom_cols` is the point-lookup twin of stats_cols: write-time
-    # bloom maintenance (incremental, same carry/harvest split), same
-    # post-publish failure contract
-    for col in bloom_cols or ():
-        try:
-            build_bloom_index(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
+    _maintain_indexes(spark, path, v, stats_cols, bloom_cols)
     return v
 
 
@@ -500,13 +591,7 @@ def read_version(
     commits."""
     v = current_version(path) if version is None else version
     manifest = _manifest(path, v)
-    # fully-dead files (every row DV-masked, see delete_rows_dv) are
-    # skipped at the scan: the anti-join would drop all their rows
-    # anyway, so the skip is pure saved I/O, never a semantic change
-    dead = set(manifest.get("dv", {}).get("dead_files", []))
-    files = [
-        os.path.join(path, f) for f in manifest["files"] if f not in dead
-    ]
+    files = [os.path.join(path, f) for f in _live_files(manifest)]
     if not files:
         return _empty_snapshot(spark, manifest)
     # project_schema (metadata-only evolution) and dv (deletion
@@ -625,29 +710,11 @@ def evolve_schema(
                 "pre-drop values) — pick a fresh name"
             )
         schema = schema.add(name, dtype, nullable=True)
-    v = cur + 1
-    _publish_manifest(
-        path,
-        v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": schema.json(),
-            "project_schema": True,
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"evolved": [c for c, _ in added_cols]},
-        },
-        expected_current,
-        prev=m,
+    return _commit(
+        path, m, m["files"],  # by reference — no data write
+        {"evolved": [c for c, _ in added_cols]}, expected_current,
+        schema=schema.json(), project_schema=True,
     )
-    return v
 
 
 RETIRED_COLS_FILE = "_RETIRED_COLS.json"
@@ -778,7 +845,6 @@ def drop_column(
                 f"{name!r} ({expr}); drop the constraint first"
             )
     new_schema = T.StructType([f for f in schema.fields if f.name != col])
-    v = cur + 1
     # Retire BEFORE publish — same crash-window ordering as
     # rename_column: retired-but-still-live is harmless (retirement
     # only gates ADDING a name), dropped-but-unretired lets a later
@@ -793,26 +859,10 @@ def drop_column(
         _atomic_json(
             os.path.join(path, RETIRED_COLS_FILE), retired + [col]
         )
-    _publish_manifest(
-        path,
-        v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": new_schema.json(),
-            "project_schema": True,
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"dropped": [col]},
-        },
-        expected_current,
-        prev=m,
+    v = _commit(
+        path, m, m["files"],  # by reference — no data write
+        {"dropped": [col]}, expected_current,
+        schema=new_schema.json(), project_schema=True,
     )
     for pointer in (f"_BLOOM_{col}.json", f"_STATS_{col}.json"):
         try:
@@ -915,31 +965,18 @@ def widen_column_type(
         )
         for f in schema.fields
     ]
-    v = cur + 1
-    _publish_manifest(
-        path,
-        v,
+    return _commit(
+        path, m, m["files"],  # by reference — no data write
         {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **({"partition_col": pc} if pc else {}),
-            "schema": T.StructType(new_fields).json(),
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {
-                "widened": {
-                    "col": col,
-                    "from": frm.simpleString(),
-                    "to": target.simpleString(),
-                }
-            },
+            "widened": {
+                "col": col,
+                "from": frm.simpleString(),
+                "to": target.simpleString(),
+            }
         },
         expected_current,
-        prev=m,
+        schema=T.StructType(new_fields).json(),
     )
-    return v
 
 
 def rename_column(
@@ -1067,27 +1104,10 @@ def rename_column(
     retired = _retired_cols(path)
     if old not in retired:
         _atomic_json(os.path.join(path, RETIRED_COLS_FILE), retired + [old])
-    _publish_manifest(
-        path,
-        v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": T.StructType(new_fields).json(),
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            **({"renames": renames} if renames else {}),
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"renamed": {"from": old, "to": new}},
-        },
-        expected_current,
-        prev=m,
+    _commit(
+        path, m, m["files"],  # by reference — no data write
+        {"renamed": {"from": old, "to": new}}, expected_current,
+        schema=T.StructType(new_fields).json(), renames=renames or None,
     )
     for kind in ("_BLOOM_", "_STATS_"):
         src = os.path.join(path, f"{kind}{old}.json")
@@ -1147,19 +1167,89 @@ def rename_column(
 DV_DIR = "_dv"
 
 
-def _tagged_scan(spark: SparkSession, path: str, m: dict) -> DataFrame:
-    """The manifest's files with (__dv_file, __dv_pos) row identity
-    attached from the scan's `_metadata` struct — relpath via the same
-    anchored strip the bloom index uses, position from
-    `_metadata.row_index` (scan bookkeeping, zero extra I/O). Tagging
-    happens inside _scan_with_renames, per physical-name group."""
-    return _scan_with_renames(
-        spark,
-        m,
-        [os.path.join(path, f) for f in m["files"]],
-        path=path,
-        tag=True,
+def _dv_rows(spark: SparkSession, path: str, m: dict) -> DataFrame:
+    """m's deletion vector as (file, pos) rows."""
+    return spark.read.schema("file string, pos bigint").parquet(
+        os.path.join(path, m["dv"]["sidecar"])
     )
+
+
+def _live_files(m: dict) -> list[str]:
+    """m's files minus the fully-dead ones (every row DV-masked, see
+    delete_rows_dv): a scan of them yields nothing after the
+    anti-join, so skipping them is pure saved I/O."""
+    prior_dead = set(m.get("dv", {}).get("dead_files", []))
+    return [f for f in m["files"] if f not in prior_dead]
+
+
+def _live_rows(
+    spark: SparkSession, path: str, m: dict, files: list[str]
+) -> DataFrame:
+    """The rows of `files` (scan paths under the table root) that m's
+    deletion vector does not mask, each tagged with its (__dv_file,
+    __dv_pos) row identity from the scan's `_metadata` struct —
+    relpath via the same anchored strip the bloom index uses, position
+    from `_metadata.row_index` (scan bookkeeping, zero extra I/O).
+    Tagging happens inside _scan_with_renames, per physical-name
+    group. The DV is O(deleted rows) and AQE broadcasts it when small,
+    so the filter costs one map-side join over the scan."""
+    tagged = _scan_with_renames(spark, m, files, path=path, tag=True)
+    if not m.get("dv"):
+        return tagged
+    dv = _dv_rows(spark, path, m).select(
+        F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
+    )
+    return tagged.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
+
+
+def _live_scan(
+    spark: SparkSession, path: str, m: dict, files: list[str] | None = None
+) -> DataFrame | None:
+    """_live_rows over `files` (relpaths; default every live file of
+    m), or None when there is no file to scan."""
+    files = _live_files(m) if files is None else files
+    if not files:
+        return None
+    return _live_rows(spark, path, m, [os.path.join(path, f) for f in files])
+
+
+def _extend_dv(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    v: int,
+    hits: DataFrame | None,
+    files: list[str],
+) -> dict | None:
+    """Write version v's cumulative deletion vector — m's prior rows
+    plus the row identities (__dv_file, __dv_pos) of `hits` — as ONE
+    parquet sidecar (`_dv/v{N}-…`), and return its pointer for the
+    manifest listing `files`; None when the vector is empty (the
+    commit then carries no dv key, so readers never pay the anti-join
+    for an empty sidecar; the orphan dir is vacuum-reclaimable)."""
+    rows = (
+        hits.select(
+            F.col("__dv_file").alias("file"),
+            F.col("__dv_pos").cast("bigint").alias("pos"),
+        )
+        if hits is not None
+        else spark.createDataFrame([], "file string, pos bigint")
+    )
+    if m.get("dv"):
+        rows = _dv_rows(spark, path, m).unionByName(rows)
+    sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
+    sidecar_dir = os.path.join(os.path.abspath(path), sidecar_rel)
+    rows.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
+        "overwrite"
+    ).parquet(sidecar_dir)
+    n_dv, dead_files = _dv_sidecar_stats(spark, path, sidecar_dir, files)
+    if n_dv == 0:
+        return None
+    return {
+        "sidecar": sidecar_rel,
+        "rows": n_dv,
+        **({"dead_files": dead_files} if dead_files else {}),
+    }
 
 
 def delete_rows_dv(
@@ -1185,11 +1275,10 @@ def delete_rows_dv(
     Rewrite-maintenance interplay: compact_files and purge_rows
     REFUSE a DV-bearing snapshot (their rewrites shift row ordinals,
     which would corrupt position-keyed deletes) — run
-    materialize_deletes first. upsert_version_cow, evolve_schema,
-    append_version_clustered and drop_partitions_before carry the DV
-    pointer by reference, which is always sound: DV rows naming files
-    a later commit rewrote or dropped can never match a scan of that
-    commit's files (see _read_files_as_snapshot).
+    materialize_deletes first. Every commit that carries files carries
+    the DV pointer by reference (_commit), which is always sound: DV
+    rows naming files a later commit rewrote or dropped can never
+    match a scan of that commit's files (see _read_files_as_snapshot).
 
     DV-AWARE INDEX MAINTENANCE (VERDICT r12 task 7): when the table
     has bloom/stats index pointers, the commit also computes
@@ -1209,90 +1298,23 @@ def delete_rows_dv(
     if m["version"] == 0:
         raise ValueError("cannot delete from an empty table")
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    abs_root = os.path.abspath(path)
-    v = m["version"] + 1
-    sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
-    sidecar_dir = os.path.join(abs_root, sidecar_rel)
-
-    # prior dead files have no live rows: skip their scan entirely
-    prior_dead = set(m.get("dv", {}).get("dead_files", []))
-    live_files = [f for f in m["files"] if f not in prior_dead]
-    tagged = (
-        _tagged_scan(spark, path, {**m, "files": live_files})
-        if live_files
-        else None
+    live = _live_scan(spark, path, m)
+    dv = _extend_dv(
+        spark, path, m, m["version"] + 1,
+        None if live is None else live.filter(cond), m["files"],
     )
-    prior_dv = (
-        spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(path, m["dv"]["sidecar"])
-        )
-        if m.get("dv")
-        else None
+    # an empty vector (nothing was ever deleted) is still a real
+    # commit: the caller observed "delete ran, matched nothing" at a
+    # new version
+    return _commit(
+        path, m, m["files"],
+        {**(meta or {}), "dv_rows": dv["rows"] if dv else 0},
+        expected_current, dv=dv,
     )
-    if tagged is not None and prior_dv is not None:
-        tagged = tagged.join(
-            prior_dv.select(
-                F.col("file").alias("__dv_file"),
-                F.col("pos").alias("__dv_pos"),
-            ),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        )
-    matched = (
-        tagged.filter(cond).select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").cast("bigint").alias("pos"),
-        )
-        if tagged is not None
-        else spark.createDataFrame([], "file string, pos bigint")
-    )
-    out = matched if prior_dv is None else prior_dv.unionByName(matched)
-    out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
-        "overwrite"
-    ).parquet(sidecar_dir)
-    n_dv, dead_files = _dv_sidecar_stats(spark, path, sidecar_dir, m)
-    if n_dv == 0:
-        # nothing was ever deleted: commit WITHOUT a dv key so readers
-        # never pay the anti-join for an empty sidecar (the orphan dir
-        # is vacuum-reclaimable); still a real commit — the caller
-        # observed "delete ran, matched nothing" at a new version
-        manifest = {
-            "version": v,
-            "files": m["files"],
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": m["schema"],
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            "meta": {**(meta or {}), "dv_rows": 0},
-        }
-        _publish_manifest(path, v, manifest, expected_current, prev=m)
-        return v
-    manifest = {
-        "version": v,
-        "files": m["files"],
-        **({"partitions": m["partitions"]} if "partitions" in m else {}),
-        **({"partition_col": m["partition_col"]} if "partition_col" in m else {}),
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {**(meta or {}), "dv_rows": n_dv},
-        "dv": {
-            "sidecar": sidecar_rel,
-            "rows": n_dv,
-            **({"dead_files": dead_files} if dead_files else {}),
-        },
-    }
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return v
 
 
 def _dv_sidecar_stats(
-    spark: SparkSession, path: str, sidecar_dir: str, m: dict
+    spark: SparkSession, path: str, sidecar_dir: str, files: list[str]
 ) -> tuple[int, list[str]]:
     """(cumulative DV row count, fully-dead file relpaths) for a
     just-written DV sidecar. The count comes from the sidecar's
@@ -1327,7 +1349,7 @@ def _dv_sidecar_stats(
         .collect()
     }
     abs_root = os.path.abspath(path)
-    manifest_files = set(m["files"])
+    manifest_files = set(files)
     dead = []
     for rel, cnt in counts.items():
         if rel not in manifest_files:
@@ -1407,32 +1429,7 @@ def update_rows_mor(
             "upsert_version_cow for partition-granular updates"
         )
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    abs_root = os.path.abspath(path)
-    v = m["version"] + 1
-
-    prior_dead = set(m.get("dv", {}).get("dead_files", []))
-    live_files = [f for f in m["files"] if f not in prior_dead]
-    prior_dv = (
-        spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(path, m["dv"]["sidecar"])
-        )
-        if m.get("dv")
-        else None
-    )
-    tagged = (
-        _tagged_scan(spark, path, {**m, "files": live_files})
-        if live_files
-        else None
-    )
-    if tagged is not None and prior_dv is not None:
-        tagged = tagged.join(
-            prior_dv.select(
-                F.col("file").alias("__dv_file"),
-                F.col("pos").alias("__dv_pos"),
-            ),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        )
+    tagged = _live_scan(spark, path, m)
     if tagged is None:
         return m["version"]  # empty table: nothing to update
     # matched feeds TWO writes (updated images + DV extension); the
@@ -1445,22 +1442,10 @@ def update_rows_mor(
         # "update ran, matched nothing" at a new version), carrying
         # files AND the prior DV pointer untouched — no sidecar, no
         # data write, no orphans
-        _publish_manifest(
-            path,
-            v,
-            {
-                "version": v,
-                "files": m["files"],
-                "schema": m["schema"],
-                **({"project_schema": True} if m.get("project_schema") else {}),
-                "committed_at": time.time(),
-                "meta": {**(meta or {}), "updated_rows": 0},
-                **({"dv": m["dv"]} if m.get("dv") else {}),
-            },
+        return _commit(
+            path, m, m["files"], {**(meta or {}), "updated_rows": 0},
             expected_current,
-            prev=m,
         )
-        return v
 
     data_cols = [c for c in matched.columns if not c.startswith("__dv_")]
     for col_name in assignments:
@@ -1480,46 +1465,12 @@ def update_rows_mor(
             for c in data_cols
         ]
     )
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        updated, path, lambda g: g.write.mode("overwrite").parquet(data_dir)
+    v = m["version"] + 1
+    files = m["files"] + _write_data(updated, path, v)
+    return _commit(
+        path, m, files, {**(meta or {}), "updated_rows": n_matched},
+        expected_current, dv=_extend_dv(spark, path, m, v, matched, files),
     )
-    rel_dir = os.path.relpath(data_dir, path)
-    new_files = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-
-    sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
-    sidecar_dir = os.path.join(abs_root, sidecar_rel)
-    masked = matched.select(
-        F.col("__dv_file").alias("file"),
-        F.col("__dv_pos").cast("bigint").alias("pos"),
-    )
-    out = masked if prior_dv is None else prior_dv.unionByName(masked)
-    out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
-        "overwrite"
-    ).parquet(sidecar_dir)
-    files = sorted(list(m["files"]) + new_files)
-    n_dv, dead_files = _dv_sidecar_stats(
-        spark, path, sidecar_dir, {**m, "files": files}
-    )
-    manifest = {
-        "version": v,
-        "files": files,
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {**(meta or {}), "updated_rows": n_matched},
-        "dv": {
-            "sidecar": sidecar_rel,
-            "rows": n_dv,
-            **({"dead_files": dead_files} if dead_files else {}),
-        },
-    }
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return v
 
 
 def update_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,11 +1632,8 @@ def merge_into_mor(
     data_cols, col_type = _validate_merge_spec(
         target_schema, when_matched, insert_not_matched
     )
-    abs_root = os.path.abspath(path)
     v = m["version"] + 1
-
-    prior_dead = set(m.get("dv", {}).get("dead_files", []))
-    live_files = [f for f in m["files"] if f not in prior_dead]
+    live_files = _live_files(m)
     n_live_before_prune = len(live_files)
     if prune_on is not None and live_files:
         if prune_on not in keys:
@@ -1713,27 +1661,7 @@ def merge_into_mor(
             )
             live_files = [f for f in live_files if f in cand]
     n_files_scanned = len(live_files)
-    prior_dv = (
-        spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(path, m["dv"]["sidecar"])
-        )
-        if m.get("dv")
-        else None
-    )
-    tagged = (
-        _tagged_scan(spark, path, {**m, "files": live_files})
-        if live_files
-        else None
-    )
-    if tagged is not None and prior_dv is not None:
-        tagged = tagged.join(
-            prior_dv.select(
-                F.col("file").alias("__dv_file"),
-                F.col("pos").alias("__dv_pos"),
-            ),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        )
+    tagged = _live_scan(spark, path, m, live_files)
 
     def _ins_expr(c: str) -> F.Column:
         e = (
@@ -1873,20 +1801,7 @@ def merge_into_mor(
         for p in image_parts[1:]:
             images = images.unionByName(p)
 
-    new_files: list[str] = []
-    if images is not None:
-        data_dir = _attempt_data_dir(path, v)
-        _guarded_write(
-            images,
-            path,
-            lambda g: g.write.mode("overwrite").parquet(data_dir),
-        )
-        rel_dir = os.path.relpath(data_dir, path)
-        new_files = sorted(
-            os.path.join(rel_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
+    new_files = [] if images is None else _write_data(images, path, v)
 
     delete_idx = [
         i for i, (op, _a, _c) in enumerate(when_matched) if op == "delete"
@@ -1896,38 +1811,14 @@ def merge_into_mor(
     ]
     n_upd = sum(counts.get((True, i), 0) for i in update_idx)
     n_del = sum(counts.get((True, i), 0) for i in delete_idx)
-    files = sorted(list(m["files"]) + new_files)
-
-    dv_pointer = m.get("dv")
+    files = m["files"] + new_files
+    dv = m.get("dv")
     if flat is not None and (n_upd or n_del):
-        sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
-        sidecar_dir = os.path.join(abs_root, sidecar_rel)
-        masked = flat.filter(
-            F.col("__matched") & F.col("__action").isNotNull()
-        ).select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").cast("bigint").alias("pos"),
-        )
-        out = masked if prior_dv is None else prior_dv.unionByName(masked)
-        out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
-            "overwrite"
-        ).parquet(sidecar_dir)
-        n_dv, dead_files = _dv_sidecar_stats(
-            spark, path, sidecar_dir, {**m, "files": files}
-        )
-        dv_pointer = {
-            "sidecar": sidecar_rel,
-            "rows": n_dv,
-            **({"dead_files": dead_files} if dead_files else {}),
-        }
-
-    manifest = {
-        "version": v,
-        "files": files,
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {
+        modified = flat.filter(F.col("__matched") & F.col("__action").isNotNull())
+        dv = _extend_dv(spark, path, m, v, modified, files)
+    return _commit(
+        path, m, files,
+        {
             **(meta or {}),
             "merge": {
                 "updated": n_upd,
@@ -1944,10 +1835,9 @@ def merge_into_mor(
                 ),
             },
         },
-        **({"dv": dv_pointer} if dv_pointer else {}),
-    }
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return v
+        expected_current,
+        dv=dv,
+    )
 
 
 def merge_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3146,17 +3036,7 @@ def _read_files_as_snapshot(
             "manifest carries a deletion vector; the table path is "
             "required to resolve its sidecar"
         )
-    tagged = _scan_with_renames(spark, m, files, path=path, tag=True)
-    dv = (
-        spark.read.schema("file string, pos bigint")
-        .parquet(os.path.join(path, m["dv"]["sidecar"]))
-        .select(
-            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-        )
-    )
-    return tagged.join(dv, ["__dv_file", "__dv_pos"], "left_anti").drop(
-        "__dv_file", "__dv_pos"
-    )
+    return _live_rows(spark, path, m, files).drop("__dv_file", "__dv_pos")
 
 
 def stats_skipping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3545,9 +3425,6 @@ def _partition_of(relpath: str, col: str = PART_COL) -> str | None:
     return None
 
 
-_distribute_for_write = distribute_for_write
-
-
 def commit_version_clustered(
     spark: SparkSession,
     path: str,
@@ -3565,35 +3442,13 @@ def commit_version_clustered(
     metadata-pruned partition reads against it unchanged."""
 
     _occ_check(path, expected_current)
-    v = current_version(path) + 1
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        _distribute_for_write(df, partition_col),
-        path,
-        lambda g: g.write.partitionBy(partition_col)
-        .mode("overwrite")
-        .parquet(data_dir),
+    parent = _parent(path)
+    files = _write_data(df, path, parent.get("version", 0) + 1, partition_col)
+    return _commit(
+        path, parent, files, meta or {}, expected_current,
+        schema=df.schema.json(), partitions={}, partition_col=partition_col,
+        project_schema=None, dv=None,
     )
-    files = _walk_rel_parquet(data_dir, path)
-    partitions = {f: _partition_of(f, partition_col) for f in files}
-    _publish_manifest(
-        path,
-        v,
-        {"version": v, "files": files, "partitions": partitions,
-         "partition_col": partition_col,
-         "schema": df.schema.json(),
-         "committed_at": time.time(),
-         "meta": meta or {}},
-        expected_current,
-    )
-    return v
-
-
-# "dv not passed" sentinel: None must stay expressible as an EXPLICIT
-# "this snapshot has no DV" (upsert_version_cow resolved the manifest
-# already and threads m.get("dv") verbatim — re-resolving would cost a
-# chain walk per commit for nothing)
-_DV_UNSET = object()
 
 
 def commit_version_partitioned(
@@ -3604,7 +3459,7 @@ def commit_version_partitioned(
     carried: list[str] | None = None,
     meta: dict | None = None,
     expected_current: int | None = None,
-    dv=_DV_UNSET,
+    dv: dict | None = None,
 ) -> int:
     """Commit df day-partitioned, carrying over untouched files from
     an earlier snapshot BY REFERENCE: the manifest lists `carried`
@@ -3613,62 +3468,36 @@ def commit_version_partitioned(
     with its partition. Data files stay immutable; only the manifest
     knows which version contributed which partition — exactly how
     Iceberg manifests span snapshots. Same OCC-guarded atomic
-    publish as commit_version.
+    publish as commit_version. A partitionBy write of ZERO rows emits
+    no data files; the recorded schema lets read_version serve the
+    empty snapshot. The manifest records `ts_col`, the column the
+    directory layout DERIVES from (PART_COL is stripped before the
+    schema is recorded, so this — not PART_COL — is what DDL must
+    protect from DROP/RENAME).
 
-    Deletion-vector safety: when `carried` is non-empty and the
-    caller did not thread `dv`, the prior manifest's DV pointer is
-    INHERITED — carried files keep whatever soft-deletes they had.
-    Dropping it silently would resurrect deleted rows in every
-    carried file (ADVICE r12: stream_versioned_append_ingest carried
-    files without threading dv). A caller that already resolved the
-    prior manifest threads dv=m.get("dv") explicitly (possibly None —
-    that is an answer, not an omission, hence the sentinel default);
-    a caller that really wants the DV gone materializes first
-    (materialize_deletes) or commits without carried files. DV rows
-    naming rewritten files never match (see _read_files_as_snapshot), so
-    inheriting is always sound."""
+    Deletion-vector safety: when `carried` is non-empty, carried files
+    keep the parent snapshot's DV pointer — dropping it would
+    resurrect deleted rows in every carried file (ADVICE r12). `dv`
+    names that pointer for a caller that resolved it already; None
+    takes the parent's. DV rows naming rewritten files never match
+    (see _read_files_as_snapshot), so inheriting is always sound; a
+    caller that really wants the DV gone materializes first
+    (materialize_deletes) or commits without carried files."""
     from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
 
     _occ_check(path, expected_current)
-    if dv is _DV_UNSET:
-        dv = (
-            _manifest(path).get("dv")
-            if carried and current_version(path) > 0
-            else None
-        )
-    v = current_version(path) + 1
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        _distribute_for_write(with_partition_col(df, ts_col), PART_COL),
-        path,
-        lambda g: g.write.partitionBy(PART_COL)
-        .mode("overwrite")
-        .parquet(data_dir),
+    parent = _parent(path)
+    new_files = _write_data(
+        with_partition_col(df, ts_col), path, parent.get("version", 0) + 1,
+        PART_COL,
     )
-    new_files = _walk_rel_parquet(data_dir, path)
-    files = sorted(list(carried or []) + new_files)
-    partitions = {f: _partition_of(f) for f in files}
-    _publish_manifest(
-        path,
-        v,
-        {"version": v, "files": files, "partitions": partitions,
-         # a partitionBy write of ZERO rows emits no data files
-         # (the write_time_partitioned issue); the recorded schema
-         # lets read_version serve the empty snapshot correctly
-         "schema": df.schema.json(),
-         # the column the directory layout DERIVES from (PART_COL is
-         # stripped before the schema is recorded, so this — not
-         # PART_COL — is what DDL must protect from DROP/RENAME)
-         "ts_col": ts_col,
-         "committed_at": time.time(),
-         # deletion-vector pointer a carried-files caller threads
-         # through (upsert_version_cow); rows naming rewritten files
-         # never match (see _read_files_as_snapshot)
-         **({"dv": dv} if dv else {}),
-         "meta": meta or {}},
+    return _commit(
+        path, parent, list(carried or []) + new_files, meta or {},
         expected_current,
+        schema=df.schema.json(), partitions={}, partition_col=None,
+        ts_col=ts_col, project_schema=None,
+        dv=(dv or parent.get("dv")) if carried else None,
     )
-    return v
 
 
 _APPEND_MAX_REBASE = 16  # bounded retries; each is metadata-only
@@ -3683,7 +3512,6 @@ def append_version_clustered(
     expected_current: int | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
-    rebase: bool = True,
 ) -> int:
     """APPEND-only clustered commit: the new rows land as fresh files
     in data/v{N+1} (partitioned by partition_col), and EVERY file of
@@ -3691,9 +3519,11 @@ def append_version_clustered(
     cost is O(new data) regardless of table size, the manifests-span-
     snapshots shape Iceberg appends have. Multiple files per partition
     are normal; readers union them and pruned reads match on the
-    per-file partition tag. Prior manifest meta carries forward under
-    the new commit's keys (so a model artifact riding in meta — the
-    IVF-PQ index's centroids/codebooks — survives appends).
+    per-file partition tag. The deletion vector carries by reference
+    (appended files have no DV rows, carried files keep theirs), and
+    prior manifest meta carries forward under the new commit's keys
+    (so a model artifact riding in meta — the IVF-PQ index's
+    centroids/codebooks — survives appends).
 
     `stats_cols` / `bloom_cols` request write-time index maintenance —
     THE path where the incremental build earns its keep: the refresh
@@ -3716,49 +3546,28 @@ def append_version_clustered(
     against: a different schema (rename/widen/drop landed — this
     append's physical files predate it), a different CHECK-constraint
     set (rows were validated under the old contract), or a different
-    partition_col. `expected_current` still pins the FIRST attempt;
-    set rebase=False for strict single-writer semantics."""
+    partition_col. `expected_current` pins the FIRST attempt."""
 
     _occ_check(path, expected_current)
-    prior = _manifest(path) if current_version(path) > 0 else {"files": [], "partitions": {}}
-    v = prior.get("version", 0) + 1
-    data_dir = _attempt_data_dir(path, v)
+    prior = _parent(path)
     cons_at_write = table_constraints(path)
-    _guarded_write(
-        _distribute_for_write(df, partition_col),
-        path,
-        lambda g: g.write.partitionBy(partition_col)
-        .mode("overwrite")
-        .parquet(data_dir),
+    new_files = _write_data(
+        df, path, prior.get("version", 0) + 1, partition_col
     )
-    new_files = _walk_rel_parquet(data_dir, path)
-    new_parts = {f: _partition_of(f, partition_col) for f in new_files}
 
     base = prior
     exp = expected_current
     for attempt in range(_APPEND_MAX_REBASE + 1):
-        v = base.get("version", 0) + 1
-        files = sorted(list(base["files"]) + new_files)
-        partitions = dict(base.get("partitions", {}))
-        partitions.update(new_parts)
         try:
-            _publish_manifest(
-                path,
-                v,
-                {"version": v, "files": files, "partitions": partitions,
-                 "partition_col": partition_col,
-                 "schema": df.schema.json(),
-                 "committed_at": time.time(),
-                 # deletion vector carries BY REFERENCE: appended files
-                 # have no DV rows, carried files keep theirs
-                 **({"dv": base["dv"]} if base.get("dv") else {}),
-                 "meta": {**base.get("meta", {}), **(meta or {})}},
-                exp,
-                prev=base if base.get("version") else None,
+            v = _commit(
+                path, base, list(base.get("files", [])) + new_files,
+                {**base.get("meta", {}), **(meta or {})}, exp,
+                schema=df.schema.json(), partition_col=partition_col,
+                partitions=base.get("partitions", {}), project_schema=None,
             )
             break
         except ConcurrentCommitError:
-            if not rebase or attempt == _APPEND_MAX_REBASE:
+            if attempt == _APPEND_MAX_REBASE:
                 raise
             cur = _manifest(path)
             if (
@@ -3773,7 +3582,7 @@ def append_version_clustered(
             if cur.get("partition_col") != partition_col:
                 raise ConcurrentCommitError(
                     "concurrent commit changed the partition layout; "
-                    "append cannot rebase across it"
+                    "append cannot be re-stacked across it"
                 )
             if table_constraints(path) != cons_at_write:
                 raise ConcurrentCommitError(
@@ -3782,17 +3591,8 @@ def append_version_clustered(
                     "— re-run the append"
                 )
             base = cur
-            exp = None  # the rebase races again under the lock's guard
-    for col in stats_cols or ():
-        try:
-            build_column_stats(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
-    for col in bloom_cols or ():
-        try:
-            build_bloom_index(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
+            exp = None  # the retry races again under the lock's guard
+    _maintain_indexes(spark, path, v, stats_cols, bloom_cols)
     return v
 
 
@@ -3986,18 +3786,13 @@ def compact_files(
         _shutil.rmtree(data_dir, ignore_errors=True)
         raise
 
-    files = sorted(carried + new_files)
-    manifest = {
-        "version": v,
-        "files": files,
-        "partitions": {f: _partition_of(f, part_col) for f in files},
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        # prior meta carries forward (append_version_clustered's
-        # contract): a compaction is a rows-identical rewrite, so the
-        # streaming sinks' replay batch_id and the IVF-PQ index's
-        # model/fingerprint must survive it
-        "meta": {
+    # prior meta carries forward (append_version_clustered's
+    # contract): a compaction is a rows-identical rewrite, so the
+    # streaming sinks' replay batch_id and the IVF-PQ index's
+    # model/fingerprint must survive it
+    _commit(
+        path, m, carried + new_files,
+        {
             **m.get("meta", {}),
             **(meta or {}),
             "compaction": {
@@ -4006,12 +3801,8 @@ def compact_files(
                 "files_out": len(new_files),
             },
         },
-    }
-    if "partition_col" in m:
-        manifest["partition_col"] = m["partition_col"]
-    if m.get("project_schema"):
-        manifest["project_schema"] = m["project_schema"]
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
+        expected_current,
+    )
     return {
         "version": v,
         "files_in": len(selected),
@@ -4201,37 +3992,6 @@ def _publish_manifest_locked(
             f"version v{v} was published by a concurrent writer "
             f"(pointer at v{cur_now}); re-read and retry"
         )
-    # metadata-only commits (DDL, DV, zorder, compaction) rebuild the
-    # manifest dict from scratch — inherit the partition-deriving
-    # column so drop/rename DDL can keep protecting it downstream,
-    # and the rename map so pre-rename files keep resolving their
-    # physical column names. Writers that did not resolve prev get it
-    # resolved here once (and passed on to the delta encoder, which
-    # would otherwise resolve it again). Dropping the rename map
-    # would make every pre-rename file read the renamed column as
-    # NULL — silent data loss, hence the unconditional inheritance.
-    # Resolution is NOT free (a delta-chain walk per publish), so the
-    # common case must not pay it: ts_col only matters for
-    # day-partitioned manifests, and renames can only exist if a
-    # rename DDL ever ran on this table — observable as the _renames/
-    # sidecar dir, ONE stat call (r14 bench regression: the first cut
-    # resolved prev on every unpartitioned commit).
-    needs = (
-        "ts_col" not in manifest and "partitions" in manifest
-    ) or (
-        "renames" not in manifest
-        and os.path.isdir(os.path.join(path, RENAMES_DIR))
-    )
-    if needs and prev is None and manifest.get("version", 1) > 1:
-        try:
-            prev = _manifest(path, manifest["version"] - 1)
-        except (FileNotFoundError, ValueError, KeyError):
-            prev = None
-    if prev is not None:
-        if "ts_col" not in manifest and "ts_col" in prev:
-            manifest["ts_col"] = prev["ts_col"]
-        if "renames" not in manifest and prev.get("renames"):
-            manifest["renames"] = prev["renames"]
     enc = _encode_manifest(path, manifest, prev=prev)
     _occ_check(path, expected_current)
     # The version-named manifest write goes through the CAS object too
@@ -4341,12 +4101,9 @@ def _compact_unpartitioned(
         _shutil.rmtree(data_dir, ignore_errors=True)
         raise
 
-    manifest = {
-        "version": v,
-        "files": sorted(carried + new_files),
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        "meta": {
+    _commit(
+        path, m, carried + new_files,
+        {
             **m.get("meta", {}),
             **(meta or {}),
             "compaction": {
@@ -4355,10 +4112,8 @@ def _compact_unpartitioned(
                 "files_out": len(new_files),
             },
         },
-    }
-    if m.get("project_schema"):
-        manifest["project_schema"] = m["project_schema"]
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
+        expected_current,
+    )
     return {
         "version": v,
         "files_in": len(small),
@@ -4681,8 +4436,7 @@ def upsert_version_cow(
     else:
         merged = updates
     return commit_version_partitioned(
-        spark, path, merged, ts_col=ts_col, carried=carried, meta=meta,
-        dv=m.get("dv"),
+        spark, path, merged, ts_col=ts_col, carried=carried, meta=meta
     )
 
 
@@ -4917,7 +4671,6 @@ def merge_into_cow(
             **(meta or {}),
             "merge": {"updated": n_upd, "deleted": n_del, "inserted": n_ins},
         },
-        dv=m.get("dv"),
     )
 
 
@@ -5784,26 +5537,12 @@ def clone_table(
         f: os.path.relpath(os.path.join(src_abs, f), dst_abs)
         for f in m["files"]
     }
-    manifest: dict = {
-        "version": 1,
-        "files": sorted(rel_of.values()),
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        "meta": {
-            **(meta or {}),
-            "cloned_from": src_abs,
-            "source_version": m["version"],
-        },
-    }
+    # the source snapshot's keys, with every file-keyed one re-keyed
+    # to the clone's ../-relative file names
+    keys = {k: m.get(k) for k in _SNAPSHOT_KEYS}
     if "partitions" in m:
-        manifest["partitions"] = {
-            rel_of[f]: p for f, p in m["partitions"].items()
-        }
-    for k in ("partition_col", "ts_col"):
-        if k in m:
-            manifest[k] = m[k]
-    if m.get("project_schema"):
-        manifest["project_schema"] = True
+        keys["partitions"] = {rel_of[f]: p for f, p in m["partitions"].items()}
+    keys["renames"] = None
     if m.get("renames"):
         os.makedirs(os.path.join(dst_abs, RENAMES_DIR), exist_ok=True)
         ren: dict = {}
@@ -5825,15 +5564,12 @@ def clone_table(
                 es.append({"from": e["from"], "files_ref": ref})
             if es:
                 ren[to] = es
-        if ren:
-            manifest["renames"] = ren
+        keys["renames"] = ren or None
     if m.get("dv"):
         # the clone's scan computes, for an external file, the
         # normalized ABSOLUTE source path (the dst-prefix strip never
         # matches) — re-key the (file, pos) rows to exactly that
-        dv_src = spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(src_abs, m["dv"]["sidecar"])
-        )
+        dv_src = _dv_rows(spark, src_abs, m)
         touched = [r.file for r in dv_src.select("file").distinct().collect()]
         pairs = []
         for f in touched:
@@ -5851,7 +5587,7 @@ def clone_table(
         ).repartition(_index_shards(max(1, len(m["files"])))).write.mode(
             "overwrite"
         ).parquet(os.path.join(dst_abs, dv_rel))
-        manifest["dv"] = {
+        keys["dv"] = {
             "sidecar": dv_rel,
             "rows": m["dv"]["rows"],
             **(
@@ -5894,7 +5630,11 @@ def clone_table(
                     f"{bad[0].asDict()}; drop the constraint or clone "
                     "the current version"
                 )
-    _publish_manifest(dst_abs, 1, manifest, expected_current=0)
+    _commit(
+        dst_abs, {}, list(rel_of.values()),
+        {**(meta or {}), "cloned_from": src_abs, "source_version": m["version"]},
+        0, **keys,
+    )
     if cons:
         _atomic_json(os.path.join(dst_abs, CONSTRAINTS_FILE), cons)
     retired = _retired_cols(src)
@@ -5949,39 +5689,22 @@ def localize_clone(
             df, path, lambda g, d=out_dir: g.write.mode("append").parquet(d)
         )
     new_files = _walk_rel_parquet(data_dir, path)
-    files = sorted(carried + new_files)
-    manifest: dict = {
-        "version": v,
-        "files": files,
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        "meta": {**(meta or {}), "localized": len(ext)},
-    }
-    if "partitions" in m:
-        new_parts = {f: _partition_of(f) for f in new_files}
-        manifest["partitions"] = {
-            **{f: parts_map[f] for f in carried},
-            **new_parts,
-        }
-    for k in ("partition_col", "ts_col"):
-        if k in m:
-            manifest[k] = m[k]
-    if m.get("project_schema"):
-        # carried local files may predate schema evolution
-        manifest["project_schema"] = True
     # DV rows for rewritten externals never match again (deletes were
     # materialized through the read); carried locals keep theirs
+    dv = None
     if m.get("dv") and carried:
         dead = [
             f for f in m["dv"].get("dead_files", []) if f in set(carried)
         ]
-        manifest["dv"] = {
+        dv = {
             "sidecar": m["dv"]["sidecar"],
             "rows": m["dv"]["rows"],
             **({"dead_files": dead} if dead else {}),
         }
-    _publish_manifest(path, v, manifest, None, prev=m)
-    return v
+    return _commit(
+        path, m, carried + new_files,
+        {**(meta or {}), "localized": len(ext)}, None, dv=dv,
+    )
 
 
 # ---- snapshot tags: named dataset releases -------------------------
@@ -6131,26 +5854,11 @@ def drop_partitions_before(
     if parts is None:
         raise ValueError("retention needs a partitioned table")
     keep = [f for f in m["files"] if (parts.get(f) is None or parts[f] >= cutoff)]
-    v = m["version"] + 1
-    _publish_manifest(
-        path,
-        v,
-        {
-            "version": v,
-            "files": keep,
-            "partitions": {f: parts[f] for f in keep if f in parts},
-            "schema": m["schema"],
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            # dv rows for dropped partitions' files go stale-but-
-            # harmless (they match nothing); carry by reference
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"retention_dropped_before": cutoff},
-        },
-        expected_current,
-        prev=m,
+    # dv rows for dropped partitions' files go stale-but-harmless
+    # (they match nothing); the pointer carries by reference
+    return _commit(
+        path, m, keep, {"retention_dropped_before": cutoff}, expected_current
     )
-    return v
 
 
 def retention_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6366,35 +6074,20 @@ def zorder_cluster_incremental(
     data_dir = os.path.join(path, "data", f"v{nv}-zinc-{uuid.uuid4().hex[:8]}")
     ordered.write.mode("overwrite").parquet(data_dir)
     new_files = _walk_rel_parquet(data_dir, path)
-    files = sorted(list(clustered) + new_files)
-    _publish_manifest(
-        path,
-        nv,
+    _commit(
+        path, m, list(clustered) + new_files,
         {
-            "version": nv,
-            "files": files,
-            "schema": m["schema"],
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            "meta": {
-                **(meta or {}),
-                "zorder_by": cols,
-                "zorder_bits": bits,
-                "zorder_incremental": {
-                    "rewrote": len(unclustered),
-                    "carried": len(clustered),
-                },
+            **(meta or {}),
+            "zorder_by": cols,
+            "zorder_bits": bits,
+            "zorder_incremental": {
+                "rewrote": len(unclustered),
+                "carried": len(clustered),
             },
-            **({"dv": m["dv"]} if m.get("dv") else {}),
         },
         expected_current,
-        prev=m,
     )
-    for c in cols:
-        try:
-            build_column_stats(spark, path, c)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(nv, e) from e
+    _maintain_indexes(spark, path, nv, stats_cols=cols)
     return nv
 
 
@@ -6604,50 +6297,16 @@ def restore_version(
                     f"violating live constraint {cname!r} ({expr}): "
                     f"{bad[0].asDict()}; drop the constraint first"
                 )
-    prev = _manifest(path, cur)
-    v = cur + 1
-    _publish_manifest(
-        path,
-        v,
-        {
-            "version": v,
-            "files": t["files"],  # by reference — no data write
-            **({"partitions": t["partitions"]} if "partitions" in t else {}),
-            **(
-                {"partition_col": t["partition_col"]}
-                if "partition_col" in t
-                else {}
-            ),
-            "schema": t["schema"],
-            **({"project_schema": True} if t.get("project_schema") else {}),
-            **({"dv": t["dv"]} if t.get("dv") else {}),
-            # The restored snapshot must carry the TARGET's own rename
-            # map and ts_col — they describe exactly the files/schema
-            # being restored — never inherit the CURRENT version's via
-            # _publish_manifest's prev-fallback: a map keyed to the
-            # current logical names is inert against the restored
-            # schema, and pre-rename files would then read their
-            # renamed columns as NULL (ADVICE r14). When the target
-            # predates every rename, an explicit EMPTY map suppresses
-            # the inheritance (the _renames/ sidecar dir exists, so
-            # the fallback would otherwise fire).
-            **({"ts_col": t["ts_col"]} if "ts_col" in t else {}),
-            **(
-                {"renames": t["renames"]}
-                if t.get("renames")
-                else (
-                    {"renames": {}}
-                    if os.path.isdir(os.path.join(path, RENAMES_DIR))
-                    else {}
-                )
-            ),
-            "committed_at": time.time(),
-            "meta": {**(meta or {}), "restored_from": to_version},
-        },
-        expected_current,
-        prev=prev,
+    # The restored snapshot takes EVERY snapshot key from the TARGET —
+    # its rename map and ts_col describe exactly the files and schema
+    # being restored; the current version's rename map is keyed to
+    # logical names the restored schema may not have, and pre-rename
+    # files would read their renamed columns as NULL (ADVICE r14)
+    return _commit(
+        path, _manifest(path, cur), t["files"],  # by reference
+        {**(meta or {}), "restored_from": to_version}, expected_current,
+        **{k: t.get(k) for k in _SNAPSHOT_KEYS},
     )
-    return v
 
 
 def table_history_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6847,9 +6506,9 @@ def reserve_identity(path: str, id_col: str, n: int) -> int:
     CONCURRENT-WRITER identity protocol: the read-and-advance runs
     under the property flock, so two appenders' ranges are disjoint
     BEFORE either commits (their blind appends then commute through
-    the rebase path). A writer that crashes after reserving leaves a
-    GAP in the id space, never a duplicate — exactly Delta's identity
-    contract (gaps allowed, reuse never). Single-writer pipelines
+    append_version_clustered's conflict retry). A writer that crashes
+    after reserving leaves a GAP in the id space, never a duplicate —
+    exactly Delta's identity contract (gaps allowed, reuse never). Single-writer pipelines
     that want gap-free density call advance_identity AFTER the
     publish instead (identity_column_appends does); the two modes
     share the same monotonic property file. Returns start."""

@@ -1552,9 +1552,8 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
                         path=table,
                     ).select("event_id")
                     batch = batch.join(existing, "event_id", "left_anti")
-        # dv threaded from the already-resolved manifest (None when
-        # the table has none) — the sentinel default would otherwise
-        # re-resolve the chain per batch just to find the same answer
+        # carried files keep the table's deletion vector (the pointer
+        # resolved above; None when the table has none)
         V.commit_version_partitioned(
             spark, table, batch, ts_col="ts", carried=carried,
             meta={"batch_id": batch_id}, dv=prior_dv,

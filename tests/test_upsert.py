@@ -121,7 +121,8 @@ def test_distribute_for_write_layout(spark, tmp_path):
     assert caller_partitioned(ev.repartition(4))
     assert caller_partitioned(ev.repartition(4).withColumn("d", F.to_date("ts")))
     assert not caller_partitioned(ev)
-    assert distribute_for_write(ev.repartition(4), "d") is not None
+    laid_out = ev.repartition(4)
+    assert distribute_for_write(laid_out, "d") is laid_out  # untouched
 
     # many-small-inputs: 32 input partitions, files/day must not be 32
     t1 = str(tmp_path / "fanin")
@@ -161,6 +162,37 @@ def test_distribute_for_write_layout(spark, tmp_path):
             spark.conf.set(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", prev
             )
+
+
+def test_distribute_for_write_fails_closed(spark, monkeypatch):
+    """When the AQE setting cannot be read, the write distribution is
+    the plain hash repartition on the layout column — correct with AQE
+    on or off — never a REBALANCE hint that a session without AQE
+    drops silently."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from data_ingestion_pipeline_spark.operators.upsert import (
+        distribute_for_write,
+    )
+
+    ev = load_table(spark, SF_TEST, "events").withColumn(
+        "d", F.to_date("ts")
+    )
+
+    real_get = RuntimeConfig.get
+
+    def unreadable(self, key, *args, **kwargs):
+        if key == "spark.sql.adaptive.enabled":
+            raise RuntimeError("session conf unavailable")
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", unreadable)
+    planned = distribute_for_write(ev, "d")
+    monkeypatch.undo()
+    plan = planned._jdf.queryExecution().analyzed().toString()
+    top = plan.splitlines()[0]
+    assert top.startswith("RepartitionByExpression [d#"), plan
+    assert "rebalance" not in plan.lower()
 
 
 def test_upsert_after_empty_create_heals_layout(spark, tmp_path):
